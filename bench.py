@@ -107,7 +107,6 @@ CORPUS_ROWS_ORDER = (
     "sim_minhash_corpus",
     "sim_minhash_fullsig_corpus",
     "sim_minhash_capped_corpus",
-    "sim_prefix_corpus_10k",
     "kg_pipeline_clustered",
 )
 
@@ -278,33 +277,6 @@ class _Bench:
             self.repeats,
         )
 
-    def row_sim_prefix(self):
-        # prefix filtering is EXACT but Σ prefix_df² — measured 225s on
-        # the full 50k corpus (the flat-weight content defeats the
-        # prefix bound; that is why minhash banding is the default
-        # scale path). Bench it on a 10k-doc slice so the row tracks
-        # regressions without dominating the suite.
-        from pyspark.sql import functions as F
-
-        from pdf_knowledge_extractor_spark.operators.similarity import (
-            prefix_cosine_pairs,
-        )
-
-        tfidf = self._ensure_pipeline()
-        prefix_docs = 10_000
-        sub = tfidf.join(
-            F.broadcast(
-                self.corpus.select("doc_id").orderBy("doc_id")
-                .limit(prefix_docs)
-            ),
-            "doc_id",
-        )
-        self.measure(
-            f"sim_prefix_corpus_{prefix_docs // 1000}k",
-            lambda: prefix_cosine_pairs(sub, threshold=0.7).count(),
-            self.repeats,
-        )
-
     def row_kg_pipeline_clustered(self):
         # the CLUSTERED pipeline end-to-end (VERDICT r3 item 2): real
         # KMeans (k pinned to 8 — production runs at known k; the
@@ -336,7 +308,6 @@ class _Bench:
             "sim_minhash_corpus": self.row_sim_minhash_corpus,
             "sim_minhash_fullsig_corpus": self.row_sim_minhash_fullsig_corpus,
             "sim_minhash_capped_corpus": self.row_sim_minhash_capped_corpus,
-            "sim_prefix_corpus_10k": self.row_sim_prefix,
             "kg_pipeline_clustered": self.row_kg_pipeline_clustered,
         }[name]
 

@@ -31,11 +31,11 @@ def cluster_documents(
     chosen_k, silhouette). ``k=None`` runs the silhouette search.
 
     ``unpersist_input=False`` keeps the internal vectors cache alive
-    for the RETURNED (lazy) assignments' first action — the returned
-    transform re-reads vectors, and releasing the cache before the
-    caller materializes assignments forces one more full
-    to_ml_vectors recompute (the caller then owns the release via
-    ``vectors.unpersist()``)."""
+    for the RETURNED (lazy) assignments' first action, on every path
+    (pinned k, k search, tiny corpus) — the returned transform re-reads
+    vectors, and releasing the cache before the caller materializes
+    assignments forces one more full to_ml_vectors recompute (the
+    caller then owns the release via ``vectors.unpersist()``)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.evaluation import ClusteringEvaluator
 
@@ -50,7 +50,8 @@ def cluster_documents(
     n = vectors.count()
     sc0.setJobDescription(None)
     if n < 4:
-        vectors.unpersist()
+        if unpersist_input:
+            vectors.unpersist()
         return (
             vectors.select("doc_id", F.lit(0).alias("cluster_id")),
             1,
@@ -101,7 +102,8 @@ def cluster_documents(
             continue
         if best is None or score > best[2]:
             best = (preds, kk, score)
-    vectors.unpersist()
+    if unpersist_input:
+        vectors.unpersist()
     if best is None:
         return (
             vectors.select("doc_id", F.lit(0).alias("cluster_id")), 1, 0.0

@@ -272,31 +272,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    posts: DataFrame, num_hashes: int = 64
-) -> DataFrame:
-    """(doc_id, sig: array<long>) — k minhashes per doc via
-    min(xxhash64(shingle, seed_k)).
-
-    One groupBy(doc) gathers the shingle set; the K signatures are
-    array expressions over it (sig[k] = array_min(xxhash64(s, k))) —
-    no K-fold explode, so the shuffle moves each shingle ONCE instead
-    of K times (the 64x row blowup was the dominant cost of the old
-    two-groupBy plan; same fix as similarity.minhash_blocked_cosine_
-    pairs). Output is bit-identical to the exploded version: the same
-    xxhash64(shingle, k) values feed the same min."""
-    shingle_sets = posts.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("_sh")
-    )
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda k: F.array_min(
-            F.transform(F.col("_sh"), lambda s: F.xxhash64(s, k))
-        ),
-    )
-    return shingle_sets.select("doc_id", sig.alias("sig"))
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -603,8 +578,14 @@ def simhash_near_dup_pairs(
     (Manku et al., WWW'07) and/or ``max_bucket_size`` to drop
     degenerate buckets (boilerplate clusters belong to the
     exact-fingerprint path)."""
+    if max_hamming >= 64:
+        # a distance-64 pair differs in every bit, so it shares no
+        # block under any banding — the ball would silently lose it
+        raise ValueError(
+            f"max_hamming must be < 64 (64-bit simhash), got {max_hamming}"
+        )
     if bands is None:
-        bands = min(max_hamming + 1, 64)
+        bands = max_hamming + 1
     sigs = simhash_signatures(docs, id_col, text_col, hash_fn).persist()
     blk_vals = F.array(
         *[_block_value(s, w) for s, w in _block_layout(bands)]

@@ -1,4 +1,4 @@
-"""Document-similarity θ self-join (J1): exact + LSH-blocked paths.
+"""Document-similarity θ self-join (J1): exact reference + MinHash scale path.
 
 Semantics reproduced from _compute_document_similarities
 (semantic_analyzer.py:255-389): all-pairs cosine over L2-normalized
@@ -7,26 +7,23 @@ semantic_analyzer.py:99), emit (doc1, doc2) once with doc1 < doc2;
 ``shared_concepts`` ships empty (reference leaves it deferred,
 semantic_analyzer.py:353-354).
 
-Scale design:
-- exact path: long-form self-join on term — sum(w_a * w_b) per pair.
-  The join shuffles on hash(term); a per-term posting-list cap (df
-  stop-listing) bounds the quadratic blowup of ultra-frequent terms
-  exactly like the reference's stopword drop bounds its vectorizer.
-  Right at small scale and for oracle checking; O(sum df^2) at 100 TB.
-- scale path: BucketedRandomProjectionLSH over the hashed TF-IDF
-  vectors. For unit vectors, cosine >= t  <=>  euclidean distance
-  <= sqrt(2 - 2t), so the LSH approxSimilarityJoin with that radius
-  blocks candidates; we then re-score candidates with the exact dot
-  product (cheap: candidate set is near-linear) so emitted scores are
-  exact, only recall is approximate (tunable via numHashTables).
+Two physical paths:
+- exact path (`exact_cosine_pairs`): long-form self-join on term —
+  sum(w_a * w_b) per pair. The join shuffles on hash(term). Right at
+  small scale and for oracle checking; O(sum df^2) at 100 TB.
+- scale path (`minhash_blocked_cosine_pairs`): MinHash-Jaccard banding
+  over each doc's term set blocks candidates; candidates are re-scored
+  with the exact dot product (cheap: the candidate set is
+  near-linear), so emitted scores are exact and only recall is
+  approximate. Skew is handled inside this one path: over-cap buckets
+  and head terms are density-probed, not dropped blindly.
 """
 
 from __future__ import annotations
 
 import logging
-import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from pdf_knowledge_extractor_spark.tuning import hinted
@@ -39,25 +36,19 @@ _LOG = logging.getLogger(__name__)
 def exact_cosine_pairs(
     tfidf: DataFrame,
     threshold: float = DEFAULT_THRESHOLD,
-    max_df: int | None = None,
     round_dp: int | None = None,
 ) -> DataFrame:
-    """(doc_id, term, weight[, df]) L2-normalized -> pairs
+    """(doc_id, term, weight) L2-normalized -> pairs
     (doc1_id, doc2_id, similarity_score) with doc1 < doc2 and score >=
-    threshold. ``max_df`` stop-lists terms occurring in more docs
-    (bounds the term self-join at scale). ``round_dp`` applies the
-    threshold to round(score, dp) instead of the raw double, so
-    last-ulp summation-order noise cannot flip borderline pairs (the
-    oracle-parity convention)."""
-    t = tfidf
-    if max_df is not None and "df" in t.columns:
-        t = t.filter(F.col("df") <= max_df)
-    a = t.select(
+    threshold. ``round_dp`` applies the threshold to round(score, dp)
+    instead of the raw double, so last-ulp summation-order noise cannot
+    flip borderline pairs (the oracle-parity convention)."""
+    a = tfidf.select(
         F.col("doc_id").alias("doc1_id"),
         F.col("term"),
         F.col("weight").alias("w1"),
     )
-    b = t.select(
+    b = tfidf.select(
         F.col("doc_id").alias("doc2_id"),
         F.col("term"),
         F.col("weight").alias("w2"),
@@ -71,61 +62,6 @@ def exact_cosine_pairs(
         .groupBy("doc1_id", "doc2_id")
         .agg(F.sum(F.col("w1") * F.col("w2")).alias("similarity_score"))
         .filter(score >= threshold)
-    )
-
-
-def lsh_cosine_pairs(
-    vectors: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-    num_hash_tables: int = 4,
-    bucket_length: float = 0.5,
-    seed: int = 42,
-    tfidf: DataFrame | None = None,
-) -> DataFrame:
-    """Scale path: LSH candidate blocking + exact rescoring.
-
-    ``vectors``: (doc_id, features: Vector), rows assumed
-    L2-normalized (hashed term space — collisions OK, they only
-    inflate the candidate set). Returns
-    (doc1_id, doc2_id, similarity_score).
-
-    When ``tfidf`` (the long-form L2-normalized table) is given,
-    candidate pairs are re-scored EXACTLY by the term-join dot product,
-    so emitted scores are collision-free and identical to the exact
-    path — only recall is approximate (validated >= 0.95 by tests at
-    the default parameters). Without it, scores derive from the hashed
-    vectors via cos = 1 - dist^2/2.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-
-    radius = math.sqrt(max(2.0 - 2.0 * threshold, 1e-12))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        numHashTables=num_hash_tables,
-        bucketLength=bucket_length,
-        seed=seed,
-    )
-    model = lsh.fit(vectors)
-    # slack on the radius when rescoring: hash collisions can only
-    # *raise* hashed-vector similarity, never lower it, so the exact
-    # radius already over-collects; no extra slack needed for recall.
-    pairs = model.approxSimilarityJoin(
-        vectors, vectors, radius, distCol="_dist"
-    )
-    cand = pairs.filter(
-        F.col("datasetA.doc_id") < F.col("datasetB.doc_id")
-    ).select(
-        F.col("datasetA.doc_id").alias("doc1_id"),
-        F.col("datasetB.doc_id").alias("doc2_id"),
-        (1.0 - F.col("_dist") * F.col("_dist") / 2.0).alias("_approx"),
-    )
-    if tfidf is None:
-        return cand.filter(F.col("_approx") >= threshold).select(
-            "doc1_id", "doc2_id", F.col("_approx").alias("similarity_score")
-        )
-    return _rescore_candidates(
-        cand.select("doc1_id", "doc2_id"), tfidf, threshold
     )
 
 
@@ -247,56 +183,6 @@ def _rescore_candidates(
     )
 
 
-def prefix_cosine_pairs(
-    tfidf: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-    eps: float = 1e-9,
-) -> DataFrame:
-    """Exact threshold cosine self-join via prefix filtering
-    (all-pairs similarity search, Bayardo/Ma/Srikant, WWW'07 — public
-    algorithm). The default scale path: exact results, no LSH recall
-    loss, and the candidate join touches only *prefix* posting lists.
-
-    Terms are canonically ordered rare-first (df asc). For an
-    L2-normalized doc, once the cumulative squared weight of its
-    rarest terms reaches 1 - t², the remaining (common) terms alone
-    cannot push any pair's dot product to t — so only the rare-term
-    prefix participates in the candidate join; candidates that share a
-    term in BOTH prefixes are re-scored exactly over the full term
-    lists. Cost drops from Σ df² to Σ prefix_df², which removes the
-    hot common terms from the quadratic join at 100 TB scale.
-
-    Requires ``df`` column (kept by tfidf_longform) and normalized
-    weights.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("term"))
-    with_cum = tfidf.withColumn(
-        "_cum_before",
-        F.coalesce(
-            F.sum(F.col("weight") * F.col("weight")).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0.0),
-        ),
-    )
-    # row is in the prefix while the mass at-or-after it can still
-    # reach the threshold: 1 - cum_before >= t^2
-    prefix = with_cum.filter(
-        (1.0 - F.col("_cum_before")) >= (threshold * threshold - eps)
-    ).select("doc_id", "term")
-
-    pa = prefix.select(F.col("doc_id").alias("doc1_id"), "term")
-    pb = prefix.select(F.col("doc_id").alias("doc2_id"), "term")
-    candidates = (
-        pa.join(pb.transform(hinted), "term")
-        .filter(F.col("doc1_id") < F.col("doc2_id"))
-        .select("doc1_id", "doc2_id")
-    )
-    return _rescore_candidates(_dedup_pairs(candidates), tfidf, threshold)
-
-
 # bound on the head-term list shipped through the driver by the AUTO
 # signature stop-list: #terms with df > frac·N is at most
 # avg_doc_len / frac (Σ df = N·L), i.e. ~32k at L=160, frac=0.005 —
@@ -318,9 +204,9 @@ def collect_signature_head_census(
     head-term census (term, df) AND each head's deterministic posting
     sample — everything `_auto_signature_stoplist` needs before its
     probe, so the operator pays no further full-corpus scans for
-    sampling. The sample selection replicates the r6 window form
-    exactly (same hash pre-filter, same (xxhash64(term, doc_id),
-    doc_id) order), so probe decisions are byte-identical.
+    sampling. Each sample is deterministic: a hash pre-filter keeps
+    ~4·sample_docs postings per term, and the first ``sample_docs`` in
+    (xxhash64(term, doc_id), doc_id) order are taken.
 
     Callers that must materialize the tfidf cache anyway (the
     pipeline) use THIS action as the materialization job and pass the
@@ -371,8 +257,7 @@ def _auto_signature_stoplist(
     head_rows: list | None = None,
 ) -> DataFrame | None:
     """Probe-verified head-term stop-list for the banding SIGNATURE
-    (round-6 headline: the recall-safe, default-on form of the r5
-    opt-in ``signature_max_df``).
+    (the recall-safe form of a df cap; ``signature_max_df="auto"``).
 
     Head terms (df > max(floor, frac·N)) drive the blocker's sub-cap
     random-collision volume — the measured cause of the superlinear
@@ -381,8 +266,9 @@ def _auto_signature_stoplist(
     from signatures cut candidates ~19× with byte-identical output on
     the Zipf corpus — but a blanket df cap silently erases the banding
     signal of mutated-boilerplate families LARGER than the cap (their
-    shared base words ARE high-df; test_signature_max_df_loses_large_
-    families). This is the identical dichotomy the hot-bucket cap
+    shared base words ARE high-df: a cap at 50 kept under 15% of the
+    pairs of one 200-doc family). This is the identical dichotomy the
+    hot-bucket cap
     already solved with its density probe (false-positive pile-ups vs
     true-dense families), so the same machinery decides per TERM:
 
@@ -434,20 +320,9 @@ def _auto_signature_stoplist(
         )
     if head_rows is None:
         # ONE job: head census AND per-term posting samples together
-        # (round 7 — the r6 form ran the census, then a second full
-        # posting scan + window job just to draw the per-term samples)
         head_rows = collect_signature_head_census(
             tfidf, df_floor=head_df_floor, sample_docs=sample_docs
         )
-    # rows from collect_signature_head_census carry the samples; a
-    # caller passing a bare (term, df) census falls back to the
-    # distributed window sampler below (identical selection)
-    samples_by_term = None
-    if head_rows and "sampled" in head_rows[0].__fields__:
-        samples_by_term = {
-            str(r["term"]): [s["doc_id"] for s in r["sampled"]]
-            for r in head_rows
-        }
     cap = max(head_df_floor, int(head_df_frac * n_docs))
     heads = [
         (str(r["term"]), int(r["df"]))
@@ -495,55 +370,18 @@ def _auto_signature_stoplist(
         )
         return None
 
-    doc_id_type = tfidf.schema["doc_id"].dataType
-    sample_persisted = False
-    if samples_by_term is not None:
-        # the fused census already drew the samples — ship them back
-        # as a LOCAL relation (no job, broadcasts for free below)
-        from pyspark.sql import types as T
+    # the census already drew the samples — ship them back as a LOCAL
+    # relation (no job, broadcasts for free below)
+    from pyspark.sql import types as T
 
-        sample = spark.createDataFrame(
-            [(t, d) for t, _d in heads for d in samples_by_term[t]],
-            schema=T.StructType([
-                T.StructField("term", T.StringType()),
-                T.StructField("doc_id", doc_id_type),
-            ]),
-        )
-    else:
-        from pyspark.sql import Window
-
-        head_df = F.broadcast(
-            spark.createDataFrame(heads, schema="term string, df bigint")
-            .select("term")
-        )
-        postings = tfidf.join(head_df, "term", "left_semi").select(
-            "term", "doc_id", "df"
-        )
-        # pre-thin each posting list with a deterministic hash filter
-        # BEFORE the row_number window: a head term's posting list is
-        # up to N rows (a 30%-df term at 1.2M docs = 360k rows in ONE
-        # window partition to sort); keeping rows with hash mod df <
-        # 4·s leaves ~4·s expected survivors per term (P[< s
-        # survivors] is negligible, and a short sample only shrinks
-        # the probe — never wrong, just less evidence), so the window
-        # sorts O(s·heads) rows total instead of Σ df
-        survivors = postings.filter(
-            F.pmod(F.xxhash64("term", "doc_id"), F.col("df"))
-            < F.least(F.lit(4 * sample_docs), F.col("df"))
-        )
-        w = Window.partitionBy("term").orderBy(
-            F.xxhash64("term", "doc_id"), "doc_id"
-        )
-        # persist the sampled postings (~4·sample_docs rows per head
-        # term): the pair join reads this subtree twice and the
-        # probe's doc-list broadcast a third time, and each un-cached
-        # read re-ran the full long-form scan + hash-filter + window
-        sample = survivors.withColumn(
-            "_rn", F.row_number().over(w)
-        ).filter(F.col("_rn") <= sample_docs).select(
-            "term", "doc_id"
-        ).persist()
-        sample_persisted = True
+    sampled = {str(r["term"]): r["sampled"] for r in head_rows}
+    sample = spark.createDataFrame(
+        [(t, x["doc_id"]) for t, _d in heads for x in sampled[t]],
+        schema=T.StructType([
+            T.StructField("term", T.StringType()),
+            T.StructField("doc_id", tfidf.schema["doc_id"].dataType),
+        ]),
+    )
     s1 = sample.select("term", F.col("doc_id").alias("doc1_id"))
     s2 = sample.select("term", F.col("doc_id").alias("doc2_id"))
     sample_pairs = s1.join(s2, "term").filter(
@@ -569,8 +407,6 @@ def _auto_signature_stoplist(
         .alias("_ok"),
     ).collect()
     probe_vec.unpersist()
-    if sample_persisted:
-        sample.unpersist()
     excluded = [
         (r["term"],)
         for r in verdicts
@@ -603,7 +439,7 @@ def minhash_blocked_cosine_pairs(
     hot_sample_docs: int = 24,
     hot_min_precision: float = 0.5,
     stats: dict | None = None,
-    signature_max_df: int | str | None = "auto",
+    signature_max_df: str | None = "auto",
     n_docs: int | None = None,
     signature_head_df_frac: float = 0.005,
     signature_head_df_floor: int = SIGNATURE_HEAD_DF_FLOOR,
@@ -620,7 +456,7 @@ def minhash_blocked_cosine_pairs(
     SIGNATURE only (the rescore always dots the full vectors, so every
     emitted score stays the exact cosine):
 
-    - ``"auto"`` (DEFAULT, round 6): probe-verified stop-list — head
+    - ``"auto"`` (default): probe-verified stop-list — head
       terms (df > max(floor, 0.5%·N)) are each density-probed on a
       sample of their posting list; only terms whose sampled pairs are
       NOT genuinely similar (Zipf-head noise) are excluded, so
@@ -635,18 +471,14 @@ def minhash_blocked_cosine_pairs(
       corpus (small corpora skip the machinery with output unchanged
       — the probe was pure overhead there; see
       :func:`_auto_signature_stoplist` ``probe_max_frac``).
-    - an ABSOLUTE int cap: the r5 manual knob — excludes every term
-      with df > cap, NO probe. Faster (no probe job) but recall-UNSAFE
-      on corpora with mutated-boilerplate families larger than the
-      cap: their shared base words have df ≈ family size and the cap
-      erases the family's entire banding signal — a silent recall
-      loss (asserted by test_signature_max_df_loses_large_families).
-      Use only where high-df sharing is known to be noise (e.g.
-      pre-deduplicated web text).
     - ``None``: band over the full term set (the oracle-parity /
       measurement-baseline setting).
 
-    Why this beats prefix filtering / cosine-LSH at 100 TB: the
+    Any other value raises ``ValueError``: an absolute df cap would
+    erase the banding signal of every boilerplate family larger than
+    the cap, a silent recall loss.
+
+    Why banding rather than prefix filtering or cosine-LSH at 100 TB: the
     banding collision curve 1-(1-j^r)^b is far sharper in Jaccard than
     any hyperplane scheme is in cosine — r=5, b=12 gives ~1e-5
     collision probability for unrelated pairs (j≈0.1) and >=0.99 for
@@ -723,22 +555,24 @@ def minhash_blocked_cosine_pairs(
     been consumed, so looping sessions release even the result storage
     (`clearCache()` cannot see checkpoint blocks).
     """
+    if signature_max_df not in ("auto", None):
+        raise ValueError(
+            "signature_max_df must be 'auto' or None, got "
+            f"{signature_max_df!r}"
+        )
     exclude = None
-    if signature_max_df == "auto":
-        signature_max_df = None
-        if "df" in tfidf.columns:
-            exclude = _auto_signature_stoplist(
-                tfidf, threshold, n_docs=n_docs,
-                head_df_frac=signature_head_df_frac,
-                head_df_floor=signature_head_df_floor,
-                sample_docs=signature_head_sample_docs,
-                min_precision=signature_head_min_precision,
-                probe_max_frac=signature_probe_max_frac,
-                stats=stats,
-                head_rows=signature_heads,
-            )
+    if signature_max_df == "auto" and "df" in tfidf.columns:
+        exclude = _auto_signature_stoplist(
+            tfidf, threshold, n_docs=n_docs,
+            head_df_frac=signature_head_df_frac,
+            head_df_floor=signature_head_df_floor,
+            sample_docs=signature_head_sample_docs,
+            min_precision=signature_head_min_precision,
+            probe_max_frac=signature_probe_max_frac,
+            stats=stats,
+            head_rows=signature_heads,
+        )
     banded = _banded_rows(tfidf, num_hashes, bands,
-                          signature_max_df=signature_max_df,
                           signature_exclude=exclude)
     return _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
                              hot_bucket_mode, hot_sample_docs,
@@ -749,26 +583,21 @@ def _banded_rows(
     tfidf: DataFrame,
     num_hashes: int,
     bands: int,
-    signature_max_df: int | None = None,
     signature_exclude: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, band, band_hash) MinHash-banding rows for a tfidf
     long form — the blocker shared by the pair join and the
     standalone census.
 
-    ``signature_max_df``: band over the df-filtered term set, FALLING
-    BACK to the full set for docs whose every term is over the cap —
-    an all-head-word doc would otherwise have an empty signature and
-    silently fall out of the blocker entirely (measured: ~1 doc in
+    ``signature_exclude``: a (small) term table to exclude from
+    signatures — the probe-verified AUTO stop-list
+    (_auto_signature_stoplist). Broadcast-joined onto the long form.
+    Docs whose every term is excluded FALL BACK to their full term
+    set: an all-head-word doc would otherwise have an empty signature
+    and silently fall out of the blocker entirely (measured: ~1 doc in
     24k on the 1.2M Zipf corpus, 40 lost triples). The fallback docs
     band among themselves, where the ordinary cap+probe machinery
     applies. Same single groupBy either way.
-
-    ``signature_exclude``: an explicit (small) term table to exclude
-    from signatures instead of a df cap — the probe-verified AUTO
-    stop-list path (_auto_signature_stoplist). Broadcast-joined onto
-    the long form; the same empty-signature full-set fallback
-    applies. Mutually exclusive with ``signature_max_df``.
 
     Physical shape (round 7): ONE groupBy(doc) computing the K
     minhashes as K flat ``min(xxhash64(term, k))`` aggregate columns —
@@ -783,16 +612,9 @@ def _banded_rows(
     has every kept-min non-null; an all-head doc falls back to the
     full-set signature for every k)."""
     rows_per_band = num_hashes // bands
-    if signature_max_df and signature_exclude is not None:
-        raise ValueError(
-            "signature_max_df and signature_exclude are mutually "
-            "exclusive"
-        )
     kept = None
     t = tfidf
-    if signature_max_df:
-        kept = F.col("df") <= signature_max_df
-    elif signature_exclude is not None:
+    if signature_exclude is not None:
         t = tfidf.join(
             F.broadcast(
                 signature_exclude.select("term")
@@ -853,40 +675,50 @@ def banding_census(
     by tools/census_scale.py to attribute data-size scaling.
     ``signature_exclude`` censuses the df-stop-listed blocker (pass
     _auto_signature_stoplist's result to measure the AUTO default)."""
-    census = (
+    sizes = (
         _banded_rows(tfidf, num_hashes, bands,
                      signature_exclude=signature_exclude)
         .groupBy("band", "band_hash")
         .agg(F.count("*").alias("_n"))
     )
-    agg = census.agg(
+    return _bucket_census(sizes, max_bucket_size)[0]
+
+
+def _bucket_census(
+    sizes: DataFrame, cap: int, *extra
+) -> tuple[dict, Row]:
+    """ONE aggregate over the per-bucket sizes (band, band_hash, _n):
+    returns (census dict, result row). The dict holds the bucket
+    count, the over-cap tail and the sub-cap candidate volume
+    Σ n·(n−1)/2 — the direct driver of rescore cost, recorded so
+    data-size scaling runs can attribute superlinear wall growth to
+    blocking-key densification from the artifact instead of inferring
+    it from the hot tail (BENCH/BASELINE.md 1.2M→2.4M analysis).
+    ``extra`` aggregate columns ride along in the same job; read them
+    off the returned row."""
+    n = F.col("_n")
+    row = sizes.agg(
         F.count("*").alias("total"),
+        F.coalesce(F.sum((n > cap).cast("long")), F.lit(0)).alias("over"),
         F.coalesce(
-            F.sum((F.col("_n") > max_bucket_size).cast("long")), F.lit(0)
-        ).alias("over"),
-        F.coalesce(
-            F.sum(
-                F.when(F.col("_n") > max_bucket_size, F.col("_n")).otherwise(0)
-            ),
-            F.lit(0),
+            F.sum(F.when(n > cap, n).otherwise(0)), F.lit(0)
         ).alias("hot_rows"),
         F.coalesce(
             F.sum(
-                F.when(
-                    F.col("_n") <= max_bucket_size,
-                    F.col("_n").cast("long") * (F.col("_n") - 1) / 2,
-                ).otherwise(0.0)
+                F.when(n <= cap, n.cast("long") * (n - 1) / 2)
+                .otherwise(0.0)
             ).cast("long"),
             F.lit(0),
         ).alias("subcap_pairs"),
+        *extra,
     ).first()
     return {
-        "cap": max_bucket_size,
-        "buckets_total": int(agg["total"]),
-        "buckets_over_cap": int(agg["over"]),
-        "banded_rows_in_hot_buckets": int(agg["hot_rows"]),
-        "candidate_pairs_subcap": int(agg["subcap_pairs"]),
-    }
+        "cap": cap,
+        "buckets_total": int(row["total"]),
+        "buckets_over_cap": int(row["over"]),
+        "banded_rows_in_hot_buckets": int(row["hot_rows"]),
+        "candidate_pairs_subcap": int(row["subcap_pairs"]),
+    }, row
 
 
 # above this many hot (over-cap) buckets, the capped path stops
@@ -920,21 +752,9 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
 
     if hot_bucket_mode not in ("verify", "drop"):
         raise ValueError(f"unknown hot_bucket_mode: {hot_bucket_mode!r}")
-    import os as _os
-    import time as _time
-
     from pyspark.sql import Window
 
     from pdf_knowledge_extractor_spark.operators.ann import _finalize
-
-    _dbg = _os.environ.get("PKE_SIM_DEBUG_TIMING")
-    _t0 = _time.perf_counter()
-
-    def _mark(label: str):
-        if _dbg:
-            _LOG.warning(
-                "SIM-TIMING %s %.1fs", label, _time.perf_counter() - _t0
-            )
 
     # persist the banded rows (3 narrow columns): the census, the
     # density probe and the anti-join all read them; recomputing the
@@ -953,36 +773,14 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
     # localCheckpoint) removes two driver-serialized jobs and the
     # checkpoint blocks that round 4 measured as parallelism-
     # independent overhead (VERDICT r4 item 3).
-    agg = census.agg(
-        F.count("*").alias("total"),
-        F.coalesce(
-            F.sum((F.col("_n") > max_bucket_size).cast("long")), F.lit(0)
-        ).alias("over"),
-        F.coalesce(
-            F.sum(
-                F.when(F.col("_n") > max_bucket_size, F.col("_n")).otherwise(0)
-            ),
-            F.lit(0),
-        ).alias("hot_rows"),
-        # sub-cap candidate volume Σ n·(n−1)/2 — the direct driver of
-        # rescore cost, recorded so data-size scaling runs can
-        # attribute superlinear wall growth to blocking-key
-        # densification from the artifact instead of inferring it
-        # from the hot tail (BENCH/BASELINE.md 1.2M→2.4M analysis)
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("_n") <= max_bucket_size,
-                    F.col("_n").cast("long") * (F.col("_n") - 1) / 2,
-                ).otherwise(0.0)
-            ).cast("long"),
-            F.lit(0),
-        ).alias("subcap_pairs"),
+    census_info, agg = _bucket_census(
+        census,
+        max_bucket_size,
         # BOUNDED at the aggregation (slice caps the array the driver
         # receives): n_over is bounded by banded_rows/cap in theory but
         # an adversarial corpus can push it to millions — the exact
-        # `over` count above decides below whether the local-relation
-        # fast path is safe or the distributed hot-key join must run
+        # `over` count decides below whether the local-relation fast
+        # path is safe or the distributed hot-key join must run
         F.slice(
             F.collect_list(
                 F.when(
@@ -993,16 +791,13 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
             1,
             _HOT_KEYS_LOCAL_MAX + 1,
         ).alias("hot"),
-    ).first()
+    )
     hot_list = list(agg["hot"])
-    n_over, n_hot_rows = int(agg["over"]), int(agg["hot_rows"])
+    n_over = census_info["buckets_over_cap"]
+    n_hot_rows = census_info["banded_rows_in_hot_buckets"]
     info = {
-        "cap": max_bucket_size,
+        **census_info,
         "mode": hot_bucket_mode,
-        "buckets_total": int(agg["total"]),
-        "buckets_over_cap": n_over,
-        "banded_rows_in_hot_buckets": n_hot_rows,
-        "candidate_pairs_subcap": int(agg["subcap_pairs"]),
         "dense_buckets_kept": 0,
         "buckets_dropped": n_over,
     }
@@ -1050,16 +845,15 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
     cold = banded.join(hot_keys, ["band", "band_hash"], "left_anti")
     candidates = _self_join(cold)
 
-    _mark("census+hotkeys done")
-    if hot_bucket_mode == "verify" and n_over > 0:
+    if hot_bucket_mode == "verify":
         hot_members = banded.join(
             hot_keys, ["band", "band_hash"], "left_semi"
         )
         w = Window.partitionBy("band", "band_hash").orderBy(
             F.xxhash64("doc_id"), "doc_id"
         )
-        # persisted for the same three-consumer reason as the
-        # stop-list sample (pair join sides + doc-list broadcast)
+        # persisted: the pair join reads it twice and the probe's
+        # doc-list broadcast a third time
         sample = hot_members.withColumn(
             "_rn", F.row_number().over(w)
         ).filter(F.col("_rn") <= hot_sample_docs).persist()
@@ -1118,7 +912,6 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
         dense = None
         if n_over <= _HOT_KEYS_LOCAL_MAX:
             probe_rows = bucket_stats.collect()
-            _mark("density probe done")
             dense_list = [
                 (int(r["band"]), int(r["band_hash"]))
                 for r in probe_rows
@@ -1147,7 +940,6 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
                     F.sum(F.col("_near_lo") + F.col("_near_hi")), F.lit(0)
                 ),
             ).first()
-            _mark("density probe done (distributed)")
             n_dense, n_sampled, n_near = (int(x) for x in g)
             if n_dense > 0:
                 dense = bucket_stats.filter(is_dense).select(
@@ -1197,9 +989,7 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
     if stats is not None:
         stats.update(info)
     out = _rescore_candidates(_dedup_pairs(candidates), tfidf, threshold)
-    out = _finalize(out, banded, *extra_caches)
-    _mark("rescore+finalize done")
-    return out
+    return _finalize(out, banded, *extra_caches)
 
 
 def with_similarity_metadata(pairs: DataFrame) -> DataFrame:

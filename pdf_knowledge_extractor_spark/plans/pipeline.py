@@ -5,14 +5,14 @@ semantic_analyzer.py:134-191, re-planned as one Spark lineage DAG):
 docs -> enrich (stats/quality/sentiment/type)
      -> mentions (keywords + phrases [+ code entities])
      -> tfidf (long form)
-     -> {concepts (salted agg), similarity pairs (exact or LSH)}
+     -> {concepts (salted agg), similarity pairs (MinHash or exact)}
      -> related docs, [clusters]
      -> nodes/edges -> triples
 
 Shuffle budget (what actually moves at 100 TB): one shuffle into
 groupBy(doc_id, term) for TF (map-side combined), one into
-groupBy(term) for DF, one for the similarity join on hash(term) (or
-the LSH bucket join), one for the salted concept agg, one for the
+groupBy(term) for DF, one for the similarity band join (or the exact
+join on hash(term)), one for the salted concept agg, one for the
 related-docs posting join, and the final repartition for the triple
 write. Every doc-level enrichment is a narrow map over the scan.
 """
@@ -47,9 +47,7 @@ from pdf_knowledge_extractor_spark.operators.related import (
 )
 from pdf_knowledge_extractor_spark.operators.similarity import (
     exact_cosine_pairs,
-    lsh_cosine_pairs,
     minhash_blocked_cosine_pairs,
-    prefix_cosine_pairs,
     with_similarity_metadata,
 )
 from pdf_knowledge_extractor_spark.operators.tfidf import (
@@ -72,15 +70,11 @@ class PipelineConfig:
     related_top_k: int = 10
     related_max_df: int = 500       # posting-list hard cap (join is Σ df²)
     per_doc_keywords: int = 20
-    # similarity-join physical strategy:
-    #  "exact"   — full term self-join (small corpora / oracle parity)
-    #  "prefix"  — prefix-filtered exact join (Bayardo WWW'07: exact
-    #              results, Σ prefix_df² cost — quadratic on
-    #              flat-weight content)
+    # similarity-join physical strategy; any other value raises:
     #  "minhash" — MinHash-Jaccard banding blocker + exact cosine
     #              rescore (default scale path: near-linear candidates,
     #              recall approximate but >= 0.95 on near-dup corpora)
-    #  "lsh"     — BucketedRandomProjection blocking + exact rescore
+    #  "exact"   — full term self-join (small corpora / oracle parity)
     similarity_strategy: str = "minhash"
     # degenerate-bucket cap for the minhash blocker: a (band, band_hash)
     # bucket larger than this holds |bucket|² candidate pairs — the
@@ -101,11 +95,11 @@ class PipelineConfig:
     # probe-verifies each head term's posting list and stop-lists only
     # verified Zipf-head NOISE — boilerplate-family base words keep
     # their signal (recall-safe; the probe is the same machinery as
-    # the hot-bucket density verify). An int is the r5 manual ABSOLUTE
-    # df cap: faster (no probe) but silently erases families larger
-    # than the cap. None disables (full-signature banding — the
-    # measurement baseline). See minhash_blocked_cosine_pairs.
-    similarity_signature_max_df: int | str | None = "auto"
+    # the hot-bucket density verify). None disables (full-signature
+    # banding — the measurement baseline). No other value is accepted:
+    # an absolute df cap silently erases families larger than the cap.
+    # See minhash_blocked_cosine_pairs.
+    similarity_signature_max_df: str | None = "auto"
     # probe ENGAGEMENT gate for the "auto" stop-list: skip the probe
     # entirely when sampling the head terms would touch more than
     # this fraction of the corpus (small-N regime — there the probe
@@ -124,10 +118,6 @@ class PipelineConfig:
     # (e.g. 64/16 -> r=4) at the cost of more candidate collisions
     similarity_num_hashes: int = 60
     similarity_bands: int = 12
-    lsh_hash_tables: int = 4
-    lsh_dims: int = 1 << 12         # hashed term space for blocking only
-                                    # (rescoring is exact; raise to 2^16+
-                                    # for vocabularies >> 100k terms)
     with_clusters: bool = False     # KMeans adds driver-side loop; opt-in
     # pin k to skip the silhouette search loop (one distributed fit
     # instead of up to 9 — what a production run at known k does);
@@ -347,6 +337,11 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Run the full KG-construction DAG; returns every relation."""
     cfg = cfg or PipelineConfig()
+    if cfg.similarity_strategy not in ("minhash", "exact"):
+        raise ValueError(
+            "similarity_strategy must be 'minhash' or 'exact', got "
+            f"{cfg.similarity_strategy!r}"
+        )
 
     # §2.9 custom hooks (config.yaml.example:176-181 analog): named
     # preprocessors rewrite the text column before enrichment; named
@@ -465,17 +460,7 @@ def run_pipeline(
         ).localCheckpoint(eager=True)
     sc.setJobDescription(None)
 
-    if cfg.similarity_strategy == "lsh":
-        vectors = to_ml_vectors(tfidf, vocab_size=cfg.lsh_dims).persist()
-        pairs = lsh_cosine_pairs(
-            vectors,
-            threshold=cfg.similarity_threshold,
-            num_hash_tables=cfg.lsh_hash_tables,
-            tfidf=tfidf,
-        )
-    elif cfg.similarity_strategy == "prefix":
-        pairs = prefix_cosine_pairs(tfidf, threshold=cfg.similarity_threshold)
-    elif cfg.similarity_strategy == "minhash":
+    if cfg.similarity_strategy == "minhash":
         sim_stats: dict = {}
         sc.setJobDescription("pke: similarity minhash (census+rescore)")
         pairs = minhash_blocked_cosine_pairs(
@@ -571,9 +556,11 @@ def run_pipeline(
             assignments = cfg.fixed_cluster_assignments
         else:
             vectors = to_ml_vectors(tfidf, vocab_size=cfg.cluster_dims)
+            # the returned transform re-reads the vectors cache: keep it
+            # until the count below has materialized the assignments
             assignments, _k, _sil = cluster_documents(
                 vectors, k=cfg.cluster_k,
-                unpersist_input=cfg.cluster_k is None,
+                unpersist_input=False,
                 # the pipeline discards the silhouette; at pinned k the
                 # evaluation is a pure extra corpus sweep
                 evaluate=cfg.cluster_k is None,
@@ -592,11 +579,7 @@ def run_pipeline(
             )
             assignments.count()
             sc.setJobDescription(None)
-            if cfg.cluster_k is not None:
-                # the pinned-k path kept the kmeans input cache alive
-                # for the transform above; assignments are materialized
-                # now, so release it
-                vectors.unpersist()
+            vectors.unpersist()
         # coherence = mean of all positive intra-cluster pairwise
         # cosines, singletons 1.0 (reference :755-771); see
         # PipelineConfig.coherence_mode for the exact/centroid/pairs

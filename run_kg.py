@@ -33,16 +33,16 @@ def main() -> None:
     ap.add_argument("--text-col", default="content")
     ap.add_argument("--lang-col", default="lang")
     ap.add_argument("--strategy", default="minhash",
-                    choices=["exact", "prefix", "minhash", "lsh"])
+                    choices=["minhash", "exact"])
     ap.add_argument("--threshold", type=float, default=0.7)
     ap.add_argument("--max-bucket", type=int, default=400,
                     help="minhash blocker degenerate-bucket cap "
                          "(0 disables)")
     ap.add_argument("--sig-max-df", default="auto",
+                    choices=["auto", "none"],
                     help="banding-signature head-term treatment: "
-                         "'auto' (default: probe-verified stop-list), "
-                         "an absolute df int (recall-unsafe manual "
-                         "cap), or 'none' (full signatures)")
+                         "'auto' (default: probe-verified stop-list) "
+                         "or 'none' (full signatures)")
     ap.add_argument("--hot-mode", default="verify",
                     choices=["verify", "drop"],
                     help="over-cap bucket treatment: 'verify' "
@@ -93,9 +93,7 @@ def main() -> None:
         similarity_max_bucket=args.max_bucket or None,
         similarity_hot_mode=args.hot_mode,
         similarity_signature_max_df=(
-            "auto" if args.sig_max_df == "auto"
-            else None if args.sig_max_df in ("none", "0")
-            else int(args.sig_max_df)
+            None if args.sig_max_df == "none" else "auto"
         ),
         with_context=not args.no_context,
         with_clusters=args.with_clusters,

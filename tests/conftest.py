@@ -1,11 +1,20 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+# The engine's 24g default driver heap is sized for production hosts.
+# The suite runs many tests in one long-lived JVM that grows its heap
+# lazily toward that limit, and on a host with less free memory the
+# kernel kills the JVM mid-suite, failing every later test with a
+# refused connection. 6g is plenty for the test corpora; export
+# PKE_DRIVER_MEM to override (child processes inherit it).
+os.environ.setdefault("PKE_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

@@ -165,3 +165,51 @@ def test_cluster_coherence_matches_reference_semantics(spark):
     assert 0.0 < got[1] < 0.7, (
         "sub-threshold cluster must report its true positive mean"
     )
+
+
+def test_search_path_keeps_vectors_until_assignments_materialize(
+    spark, monkeypatch,
+):
+    """On the k-search path (cluster_k=None) run_pipeline must get the
+    kmeans input back still cached, so materializing the assignments
+    does not recompute to_ml_vectors, and must release it itself
+    before returning."""
+    from pyspark import StorageLevel
+
+    from pdf_knowledge_extractor_spark.operators import clustering
+    from pdf_knowledge_extractor_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    topics = ["alpha beta gamma delta epsilon zeta",
+              "spark shuffle partition executor driver cluster",
+              "piano violin cello trumpet oboe clarinet"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(topics[i % 3].split()[(i + j) % 6]
+                      for j in range(8 + i % 5)))
+         for i in range(12)],
+        "doc_id long, text string",
+    )
+    real = clustering.cluster_documents
+    seen = {}
+
+    def spy(vectors, *args, **kwargs):
+        out = real(vectors, *args, **kwargs)
+        seen["vectors"] = vectors
+        seen["cached_on_return"] = (
+            vectors.storageLevel != StorageLevel.NONE
+        )
+        return out
+
+    monkeypatch.setattr(clustering, "cluster_documents", spy)
+    res = run_pipeline(
+        spark, docs, PipelineConfig(with_clusters=True, cluster_k=None),
+    )
+    assert seen["cached_on_return"], (
+        "search path released the vectors before assignments.count()"
+    )
+    assert seen["vectors"].storageLevel == StorageLevel.NONE, (
+        "run_pipeline left the kmeans input cached"
+    )
+    assert res["cluster_assignments"].count() == 12

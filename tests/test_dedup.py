@@ -4,6 +4,7 @@ Jaccard, SimHash near-dup detection."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from pdf_knowledge_extractor_spark.operators.dedup import (
     exact_duplicates,
@@ -82,6 +83,17 @@ def test_simhash_finds_near_dups(spark, small_corpus):
     assert exact
     found = len(pairs & exact) / len(exact)
     assert found >= 0.9, f"simhash found only {found:.2f} of strong near-dups"
+
+
+def test_simhash_rejects_full_width_hamming(spark, small_corpus):
+    """A distance-64 pair differs in every bit and shares no block, so
+    max_hamming >= 64 cannot return the full hamming ball: reject it."""
+    for d in (64, 65):
+        with pytest.raises(ValueError):
+            simhash_near_dup_pairs(
+                small_corpus, max_hamming=d, id_col="doc_id",
+                text_col="content",
+            )
 
 
 def test_minhash_bucket_cap(spark):

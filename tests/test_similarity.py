@@ -1,20 +1,16 @@
-"""Similarity join: exact vs numpy golden; prefix-filtered == exact;
-LSH recall >= 0.95 (SURVEY.md §7.2 item 5)."""
+"""Similarity join: exact vs numpy golden; the MinHash scale path's
+bucket cap, signature stop-list and option validation."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from pdf_knowledge_extractor_spark.operators.mentions import keyword_mentions
 from pdf_knowledge_extractor_spark.operators.similarity import (
     exact_cosine_pairs,
-    lsh_cosine_pairs,
-    prefix_cosine_pairs,
 )
-from pdf_knowledge_extractor_spark.operators.tfidf import (
-    tfidf_longform,
-    to_ml_vectors,
-)
+from pdf_knowledge_extractor_spark.operators.tfidf import tfidf_longform
 from tests.golden_reference import golden_similarities
 
 
@@ -42,15 +38,6 @@ def test_exact_pairs_match_numpy_golden(spark, small_corpus):
     for k, v in expected.items():
         assert abs(got[k] - v) < 1e-9
     assert len(expected) > 0, "corpus must contain engineered near-dups"
-
-
-def test_prefix_equals_exact(spark, small_corpus):
-    tfidf = _tfidf(small_corpus)
-    exact = _pairs_dict(exact_cosine_pairs(tfidf, 0.7))
-    pref = _pairs_dict(prefix_cosine_pairs(tfidf, 0.7))
-    assert set(exact) == set(pref)
-    for k in exact:
-        assert abs(exact[k] - pref[k]) < 1e-9
 
 
 def test_minhash_bucket_cap_drop_mode(spark):
@@ -356,81 +343,8 @@ def test_pipeline_concepts_carry_context(spark, small_corpus):
     assert any('"description":' in r["jsonld"] for r in jl)
 
 
-def test_lsh_recall(spark, small_corpus):
-    tfidf = _tfidf(small_corpus)
-    exact = _pairs_dict(exact_cosine_pairs(tfidf, 0.7))
-    vectors = to_ml_vectors(tfidf, vocab_size=1 << 12)
-    lsh = _pairs_dict(lsh_cosine_pairs(vectors, 0.7, tfidf=tfidf))
-    # precision is exact by construction (rescoring); recall >= 0.95
-    assert set(lsh) <= set(exact) or all(
-        abs(lsh[k] - exact.get(k, -1)) < 1e-9 for k in lsh
-    )
-    recall = len(set(lsh) & set(exact)) / max(len(exact), 1)
-    assert recall >= 0.95, f"LSH recall {recall}"
-
-
-def test_signature_max_df_byte_identical_on_zipf_corpus(spark, small_corpus):
-    """Opt-in banding-signature df stop-list: on the standard Zipf
-    corpus the high-df head terms produce only random band collisions
-    that the exact rescore rejects, so filtering them from the
-    SIGNATURE (the rescore still dots full vectors) must leave the
-    emitted pair set byte-identical — the ~19x candidate cut measured
-    at 1.2M (BENCH/census_scale_r5.json) is pure waste removal there."""
-    from pdf_knowledge_extractor_spark.operators.similarity import (
-        minhash_blocked_cosine_pairs,
-    )
-
-    tfidf = _tfidf(small_corpus)
-    base = _pairs_dict(minhash_blocked_cosine_pairs(tfidf, 0.7))
-    # cap at 20% of the 200-doc corpus: excludes the hot CommonUtil
-    # head and the Zipf top ranks, keeps body tails and the engineered
-    # near-dup signal
-    stopped = _pairs_dict(
-        minhash_blocked_cosine_pairs(tfidf, 0.7, signature_max_df=40)
-    )
-    assert stopped == base
-    assert len(base) > 0
-
-
-def test_signature_max_df_loses_large_families(spark):
-    """The documented counter-case (why the knob is NOT a default):
-    a mutated-boilerplate family LARGER than the df cap has df ≈
-    family size on every shared base word, so the stop-list erases
-    the banding signal of every MUTATED member (their kept set is
-    their handful of member-specific words, pairwise disjoint). Only
-    the unmutated core survives: those members' kept sets are empty,
-    the empty-signature fallback bands them over their FULL term
-    sets, and the density probe keeps that (genuinely dense) bucket.
-    The verify-mode cap without the knob keeps the whole family."""
-    from pdf_knowledge_extractor_spark.operators.similarity import (
-        minhash_blocked_cosine_pairs,
-    )
-    from pdf_knowledge_extractor_spark.corpus import generate_corpus
-
-    docs = generate_corpus(
-        spark, 800, boilerplate_fraction=0.25, boilerplate_families=1
-    ).select("doc_id", "content")
-    tfidf = _tfidf(docs)
-
-    kept = minhash_blocked_cosine_pairs(
-        tfidf, 0.7, max_bucket_size=50, hot_bucket_mode="verify"
-    ).count()
-    lost = minhash_blocked_cosine_pairs(
-        tfidf, 0.7, max_bucket_size=50, hot_bucket_mode="verify",
-        signature_max_df=50,
-    ).count()
-    # ~200 family members; with base words df≈200 > 50 stopped out,
-    # the mutated majority of the family is lost (>85%), while the
-    # unmutated core (~0.97^40 ≈ 30% of members share an identical
-    # body -> empty kept set -> full-set fallback -> dense bucket the
-    # probe keeps) must survive — proving both the loss AND the
-    # empty-signature fallback
-    assert kept > 1000
-    assert 0 < lost < kept * 0.15
-
-
 def test_auto_stoplist_byte_identical_on_zipf_corpus(spark, small_corpus):
-    """Round-6 headline: signature_max_df='auto' (the DEFAULT) probes
+    """signature_max_df='auto' (the DEFAULT) probes
     each head term's posting list and excludes only verified Zipf-head
     noise. On the plain Zipf corpus every head is noise (random
     co-occurrence the rescore rejects), so the emitted pairs must be
@@ -529,15 +443,14 @@ def test_auto_stoplist_small_corpus_gate(spark, small_corpus):
 
 
 def test_auto_stoplist_recall_safe_on_large_families(spark):
-    """The r5 counter-case that made the manual df cap opt-in: a
+    """The counter-case that rules out a plain df cap: a
     mutated-boilerplate family larger than the cap. The AUTO mode's
     per-term density probe must recognize the family's base words as
     signal (sampled posting-list pairs ARE similar), keep them in
     signatures, and lose nothing — measured against the EXACT pair
     set, since banding is probabilistic and excluding noise heads
     legitimately perturbs which borderline pairs collide (here it
-    IMPROVES recall: fewer wasted collisions). The manual cap on the
-    same corpus collapses to <10% recall."""
+    IMPROVES recall: fewer wasted collisions)."""
     from pdf_knowledge_extractor_spark.corpus import generate_corpus
     from pdf_knowledge_extractor_spark.operators.similarity import (
         exact_cosine_pairs,
@@ -564,11 +477,6 @@ def test_auto_stoplist_recall_safe_on_large_families(spark):
             stats=stats, **kw
         )
     ))
-    manual = set(_pairs_dict(
-        minhash_blocked_cosine_pairs(
-            tfidf, 0.7, signature_max_df=50, **kw
-        )
-    ))
     # the probe recognized family base words as signal
     assert stats["signature_heads_kept_family"] > 0
     assert stats["signature_heads_excluded"] > 0
@@ -580,6 +488,73 @@ def test_auto_stoplist_recall_safe_on_large_families(spark):
         f"auto {auto_recall} < baseline {base_recall}"
     )
     assert auto_recall > 0.999
-    # the manual cap's documented silent collapse, for contrast
-    assert len(manual) < 0.15 * len(exact)
     tfidf.unpersist()
+
+
+def test_all_excluded_doc_falls_back_to_full_signature(spark):
+    """A doc whose EVERY term is in the signature stop-list must not
+    fall out of the blocker: it bands over its full term set, so it
+    gets all `bands` rows, identical to its unexcluded rows."""
+    from pdf_knowledge_extractor_spark.operators.similarity import (
+        _banded_rows,
+    )
+
+    docs = spark.createDataFrame(
+        [("head", "common shared everywhere frequent"),
+         ("body", "common shared particular distinctive payload"),
+         ("other", "unrelated material entirely")],
+        "doc_id string, content string",
+    )
+    tfidf = _tfidf(docs)
+    exclude = spark.createDataFrame(
+        [("common",), ("shared",), ("everywhere",), ("frequent",)],
+        "term string",
+    )
+
+    def rows(**kw):
+        return sorted(
+            (r["doc_id"], r["band"], r["band_hash"])
+            for r in _banded_rows(tfidf, 60, 12, **kw).collect()
+        )
+
+    full = rows()
+    stopped = rows(signature_exclude=exclude)
+    head_full = [r for r in full if r[0] == "head"]
+    head_stopped = [r for r in stopped if r[0] == "head"]
+    assert len(head_stopped) == 12
+    assert head_stopped == head_full
+    # the other doc still bands over its kept terms only
+    assert [r for r in stopped if r[0] == "body"] != [
+        r for r in full if r[0] == "body"
+    ]
+    tfidf.unpersist()
+
+
+@pytest.mark.parametrize(
+    "call, value",
+    [("run_pipeline", "lsh"), ("run_pipeline", "prefix"),
+     ("minhash", 50)],
+)
+def test_removed_similarity_options_raise(spark, small_corpus, call, value):
+    """Removed strategies and the integer signature df cap are rejected
+    up front instead of silently running another path."""
+    from pdf_knowledge_extractor_spark.operators.similarity import (
+        minhash_blocked_cosine_pairs,
+    )
+    from pdf_knowledge_extractor_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    if call == "run_pipeline":
+        with pytest.raises(ValueError, match="similarity_strategy"):
+            run_pipeline(
+                spark, small_corpus,
+                PipelineConfig(similarity_strategy=value),
+                id_col="doc_id", text_col="content",
+            )
+    else:
+        tfidf = _tfidf(small_corpus)
+        with pytest.raises(ValueError, match="signature_max_df"):
+            minhash_blocked_cosine_pairs(tfidf, 0.7, signature_max_df=value)
+        tfidf.unpersist()

@@ -1,8 +1,9 @@
 """Length-skewed rescore parity: the dot product iterates the SMALLER
 doc vector per pair (operators/similarity.py _rescore_candidates), so
 a corpus mixing 300-token and 6-token documents exercises both
-when-branches. Pairs and scores must match the numpy golden exactly
-regardless of which side of the pair carries the big map.
+when-branches. Fed every doc pair of the corpus, the rescore must
+match the numpy golden exactly regardless of which side of the pair
+carries the big map.
 
 Reference semantics: semantic_analyzer.py cosine over the full
 TF-IDF matrix is length-agnostic; this gate pins our skew-optimized
@@ -15,8 +16,8 @@ import random
 
 from pdf_knowledge_extractor_spark.operators.mentions import keyword_mentions
 from pdf_knowledge_extractor_spark.operators.similarity import (
+    _rescore_candidates,
     exact_cosine_pairs,
-    prefix_cosine_pairs,
 )
 from pdf_knowledge_extractor_spark.operators.tfidf import tfidf_longform
 from tests.golden_reference import golden_similarities, keyword_tokens
@@ -53,6 +54,17 @@ def _run(spark, docs, op):
     }
 
 
+def _rescore_all_pairs(tfidf, threshold):
+    ids = sorted(
+        r["doc_id"] for r in tfidf.select("doc_id").distinct().collect()
+    )
+    pairs = tfidf.sparkSession.createDataFrame(
+        [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]],
+        "doc1_id string, doc2_id string",
+    )
+    return _rescore_candidates(pairs, tfidf, threshold)
+
+
 def test_skewed_rescore_matches_golden(spark):
     docs = _skewed_docs()
     expected = golden_similarities(docs, THRESHOLD)
@@ -69,7 +81,7 @@ def test_skewed_rescore_matches_golden(spark):
     for k, v in expected.items():
         assert abs(got[k] - v) < 1e-9, (k, got[k], v)
 
-    pref = _run(spark, docs, prefix_cosine_pairs)
-    assert set(pref) == set(expected)
+    rescored = _run(spark, docs, _rescore_all_pairs)
+    assert set(rescored) == set(expected)
     for k, v in expected.items():
-        assert abs(pref[k] - v) < 1e-9, (k, pref[k], v)
+        assert abs(rescored[k] - v) < 1e-9, (k, rescored[k], v)
